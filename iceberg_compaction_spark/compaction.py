@@ -36,6 +36,7 @@ from iceberg_compaction_spark.operators.mor import (
 from iceberg_compaction_spark.operators.validator import validate_row_counts
 from iceberg_compaction_spark.plans.datamodel import CompactionPlan
 from iceberg_compaction_spark.plans.strategy import PlanStrategy
+from iceberg_compaction_spark.sources.catalog import load_head
 from iceberg_compaction_spark.sources.manifest import Manifest, scan_data_files
 from iceberg_compaction_spark.sources.writer import (
     SortField,
@@ -102,45 +103,7 @@ class Compaction:
             preds = parse_where(where) if isinstance(where, str) else where
             tasks = prune_tasks(tasks, preds)
         strategy = PlanStrategy.from_config(self.config.planning)
-        groups = strategy.run(tasks)
-        from iceberg_compaction_spark.sources.schema_evo import (
-            NAME_MAPPING_PROP,
-            parse_name_mapping,
-        )
-
-        nmap = (
-            parse_name_mapping(
-                (manifest.properties or {}).get(NAME_MAPPING_PROP)
-            )
-            or None
-        )
-        for g in groups:
-            g.format_version = manifest.format_version
-            g.schema_fields = manifest.schema_fields or None
-            g.name_mapping = nmap
-        cols = manifest.properties.get("schema.columns") or ()
-        spec = tuple(
-            (f["source"], f.get("transform", "identity"), f.get("name"))
-            for f in manifest.partition_spec
-        )
-        order = tuple(
-            (f["source"], f.get("direction", "asc"), f.get("null-order"))
-            for f in manifest.sort_order
-        )
-        return [
-            CompactionPlan(
-                file_group=g,
-                snapshot_id=manifest.snapshot_id,
-                branch=branch,
-                starting_sequence_number=manifest.sequence_number,
-                schema_id=manifest.schema_id,
-                schema_columns=tuple(cols),
-                partition_spec=spec,
-                spec_id=manifest.default_spec_id,
-                sort_order=order,
-            )
-            for g in groups
-        ]
+        return manifest.compaction_plans(strategy.run(tasks), branch)
 
     def _effective_sort(self, plan: CompactionPlan) -> list[SortField] | None:
         """Explicit Compaction(sort_order=...) wins; otherwise the
@@ -244,7 +207,13 @@ class Compaction:
                 t.partition = tuple(g.partition)
         res = RewriteResult(plan=plan, added_files=added)
         if self.config.enable_validate_compaction:
-            out_df = self.spark.read.parquet(*[t.data_file_path for t in added])
+            # a partitioned (fan-out) write of a group whose rows are all
+            # deleted writes no file at all
+            out_df = (
+                self.spark.read.parquet(*[t.data_file_path for t in added])
+                if added
+                else df.limit(0)
+            )
             v = validate_row_counts(rewrite_file_group(self.spark, g), out_df)
             res.input_rows, res.output_rows = v.input_rows, v.output_rows
         m = self.metrics
@@ -392,6 +361,45 @@ class Compaction:
             manifest, self.plan(manifest, where=where), out_root
         )
 
+    def commit_catalog(
+        self, catalog, table_name: str, change, to_branch: str | None = None
+    ) -> Manifest:
+        """The catalog commit loop every catalog entry point shares.
+        Each attempt loads the target ref's head (main, or
+        ``to_branch``), builds the next snapshot with ``change(head)``
+        and CAS-commits it through ``catalog.commit_table``; a
+        ``CommitConflict`` (a concurrent writer moved the ref) retries
+        from a fresh head with backoff.  ``change`` returns ``head``
+        itself when nothing is left to commit (raced away), which ends
+        the loop without a commit.  Records the engine's commit
+        metrics."""
+        landed = False
+
+        def attempt() -> Manifest:
+            nonlocal landed
+            head = load_head(catalog, table_name, to_branch)
+            new = change(head)
+            if new is head:
+                return head
+            out = catalog.commit_table(
+                table_name, head.snapshot_id, new, to_branch=to_branch
+            )
+            landed = True
+            return out
+
+        t0 = time.monotonic()
+        try:
+            new = self.commit_manager.commit_with_retry(attempt)
+        except Exception:
+            self.metrics.commit_failed_counter.inc()
+            raise
+        if landed:
+            self.metrics.commit_counter.inc()
+            self.metrics.commit_duration.observe(
+                (time.monotonic() - t0) * 1000
+            )
+        return new
+
     def compact_catalog(
         self,
         catalog,
@@ -413,39 +421,20 @@ class Compaction:
         lands with the branch ref moved atomically, and main stays
         untouched until a fast-forward publishes — write-audit-publish
         with maintenance running on the audit branch."""
-
-        def _load() -> Manifest:
-            if to_branch:
-                return catalog.load_table_ref(table_name, to_branch)
-            return catalog.load_table(table_name)
-
-        manifest = _load()
+        manifest = load_head(catalog, table_name, to_branch)
         plans = self.plan(manifest, branch=to_branch or "main", where=where)
         results, stats = self.execute_plans(manifest, plans, out_root)
         if not results:
             return manifest, stats
-
-        def attempt() -> Manifest:
-            current = _load()
-            new = self.commit_manager.rewrite_files(
-                current, results, branch=to_branch or "main"
-            )
-            if to_branch:
-                return catalog.commit_table(
-                    table_name, current.snapshot_id, new, to_branch=to_branch
-                )
-            return catalog.commit_table(table_name, current.snapshot_id, new)
-
-        t0 = time.monotonic()
-        try:
-            new = self.commit_manager.commit_with_retry(attempt)
-        except Exception:
-            self.metrics.commit_failed_counter.inc()
-            raise
-        self.metrics.commit_counter.inc()
-        self.metrics.commit_duration.observe((time.monotonic() - t0) * 1000)
+        new = self.commit_catalog(
+            catalog,
+            table_name,
+            lambda head: self.commit_manager.rewrite_files(
+                head, results, branch=to_branch or "main"
+            ),
+            to_branch,
+        )
         return new, stats
-
 
     def compact_catalog_partial(
         self,
@@ -475,12 +464,7 @@ class Compaction:
         grows by one snapshot per batch — exactly Iceberg's documented
         partial-progress behavior.
         """
-        def _load() -> Manifest:
-            if to_branch:
-                return catalog.load_table_ref(table_name, to_branch)
-            return catalog.load_table(table_name)
-
-        manifest = _load()
+        manifest = load_head(catalog, table_name, to_branch)
         plans = self.plan(manifest, branch=to_branch or "main")
         stats = CompactionStats()
         committed = manifest
@@ -489,32 +473,21 @@ class Compaction:
         base = out_root or os.path.join(
             manifest.table_root, f"compacted-{manifest.next_snapshot()}"
         )
-        for i in range(0, len(plans), max(1, groups_per_commit)):
-            batch = plans[i : i + max(1, groups_per_commit)]
+        step = max(1, groups_per_commit)
+        for i in range(0, len(plans), step):
             results, bstats = self.execute_plans(
-                committed, batch, os.path.join(base, f"batch-{i}")
+                committed, plans[i : i + step], os.path.join(base, f"batch-{i}")
             )
             if not results:
                 continue
-
-            def attempt() -> Manifest:
-                current = _load()
-                new = self.commit_manager.rewrite_files(
-                    current, results, branch=to_branch or "main"
-                )
-                if to_branch:
-                    return catalog.commit_table(
-                        table_name,
-                        current.snapshot_id,
-                        new,
-                        to_branch=to_branch,
-                    )
-                return catalog.commit_table(
-                    table_name, current.snapshot_id, new
-                )
-
-            committed = self.commit_manager.commit_with_retry(attempt)
-            self.metrics.commit_counter.inc()
+            committed = self.commit_catalog(
+                catalog,
+                table_name,
+                lambda head: self.commit_manager.rewrite_files(
+                    head, results, branch=to_branch or "main"
+                ),
+                to_branch,
+            )
             stats.merge(bstats)
         return committed, stats
 
@@ -538,35 +511,17 @@ class AutoCompaction:
     def compact(
         self, manifest: Manifest, out_root: str | None = None
     ) -> tuple[Manifest, CompactionStats, "AutoPlanReport"]:
-        from dataclasses import replace
-
         from iceberg_compaction_spark.plans.auto import (
             AutoCompactionConfig,
             AutoCompactionPlanner,
         )
 
-        cfg = self.config or AutoCompactionConfig()
-        report = AutoCompactionPlanner(cfg).plan_report(
-            scan_data_files(manifest),
-            snapshot_id=manifest.snapshot_id,
-            starting_sequence_number=manifest.sequence_number,
-        )
-        order = tuple(
-            (f["source"], f.get("direction", "asc"), f.get("null-order"))
-            for f in manifest.sort_order
-        )
-        for p in report.plans:
-            p.schema_id = manifest.schema_id
-            p.sort_order = order
-        if not report.plans:
-            return manifest, CompactionStats(), report
-
+        report = AutoCompactionPlanner(
+            self.config or AutoCompactionConfig()
+        ).plan_manifest(manifest)
         inner = Compaction(
             spark=self.spark,
-            config=replace(
-                self.engine_config,
-                planning=cfg._planning(report.selected_strategy),
-            ),
+            config=self.engine_config,
             sort_order=self.sort_order,
         )
         new_manifest, stats = inner.compact_plans(

@@ -26,7 +26,7 @@ by the joins themselves.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, replace
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -102,52 +102,21 @@ def apply_position_deletes(
 
 
 def apply_equality_deletes(
-    data: DataFrame,
-    eq: EqualityDeleteTable,
-    broadcast: bool = False,
-    hot_keys: DataFrame | None = None,
-    n_salts: int = 16,
+    data: DataFrame, eq: EqualityDeleteTable, broadcast: bool = False
 ) -> DataFrame:
     """J2: anti-join on equality keys + seq residual (delete applies only
-    to strictly OLDER rows: data.seq < delete.seq).
-
-    ``hot_keys`` (a small DataFrame of equality-key combos, e.g. from
-    ``operators.skew.skewed_keys``) activates the two-path skew plan for
-    non-broadcast joins: rows with hot keys take a salted anti-join
-    (delete rows replicated per salt, so each hot key spreads over
-    ``n_salts`` reducers), the rest take the plain anti-join.  Results
-    are identical; only the shuffle distribution changes.
-    """
+    to strictly OLDER rows: data.seq < delete.seq)."""
     # Prefix the delete side so key/seq columns never collide with data's.
     sel = [F.col(k).alias(f"__eqd_{k}") for k in eq.equality_keys]
     sel.append(F.col(HIDDEN_SEQ).alias("__eqd_seq"))
     right = eq.df.select(*sel)
-
-    def anti(left: DataFrame, rt: DataFrame, salted: bool) -> DataFrame:
-        cond = reduce(
-            lambda a, b: a & b,
-            [left[k] == rt[f"__eqd_{k}"] for k in eq.equality_keys],
-        ) & (left[HIDDEN_SEQ] < rt["__eqd_seq"])
-        if salted:
-            cond = cond & (left["__salt"] == rt["__salt"])
-        return left.join(rt, on=cond, how="left_anti")
-
-    if broadcast or hot_keys is None:
-        if broadcast:
-            right = F.broadcast(right)
-        return anti(data, right, salted=False)
-
-    hot = F.broadcast(hot_keys.select(*eq.equality_keys).dropDuplicates())
-    data_hot = data.join(hot, on=eq.equality_keys, how="left_semi").withColumn(
-        "__salt", (F.rand(seed=42) * n_salts).cast("int")
-    )
-    data_cold = data.join(hot, on=eq.equality_keys, how="left_anti")
-    right_hot = right.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-    out_hot = anti(data_hot, right_hot, salted=True).drop("__salt")
-    out_cold = anti(data_cold, right, salted=False)
-    return out_cold.unionByName(out_hot)
+    if broadcast:
+        right = F.broadcast(right)
+    cond = reduce(
+        lambda a, b: a & b,
+        [data[k] == right[f"__eqd_{k}"] for k in eq.equality_keys],
+    ) & (data[HIDDEN_SEQ] < right["__eqd_seq"])
+    return data.join(right, on=cond, how="left_anti")
 
 
 def merge_on_read(
@@ -495,11 +464,14 @@ def rewrite_file_group_with_lineage(
     from iceberg_compaction_spark.sources.scan import normalize_path_str
 
     def _sub(tasks) -> FileGroup:
-        g = FileGroup.from_tasks(tasks)
-        g.format_version = group.format_version
-        g.schema_fields = group.schema_fields
-        g.name_mapping = group.name_mapping
-        return g
+        # the group's own table context, over a subset of its files
+        sub = FileGroup.from_tasks(tasks)
+        return replace(
+            group,
+            data_files=sub.data_files,
+            position_delete_files=sub.position_delete_files,
+            equality_delete_files=sub.equality_delete_files,
+        )
 
     synth = [
         t

@@ -92,21 +92,21 @@ def analyze_table(
     streaming consumers correctly skip it) through the standard CAS
     retry loop.  Returns the committed Manifest."""
     from iceberg_compaction_spark.commit import CommitManager
+    from iceberg_compaction_spark.sources.catalog import load_head
     from iceberg_compaction_spark.sources.ingest import (
         _commit,
-        _load_head,
         read_table_mor,
     )
     from iceberg_compaction_spark.sources.manifest import Manifest
 
-    current = _load_head(catalog, table_name=name, to_branch=to_branch)
+    current = load_head(catalog, table_name=name, to_branch=to_branch)
     analyzed_sid = current.snapshot_id
     rows = column_stats(
         read_table_mor(spark, current), columns, approx=approx
     ).collect()  # one row per column: metadata-sized by definition
 
     def attempt() -> Manifest:
-        cur = _load_head(catalog, table_name=name, to_branch=to_branch)
+        cur = load_head(catalog, table_name=name, to_branch=to_branch)
         new = Manifest.from_dict(cur.to_dict())
         new.snapshot_id = cur.next_snapshot()
         new.sequence_number = cur.sequence_number  # rows unchanged
@@ -302,16 +302,16 @@ def compute_table_stats(
     import uuid as _uuid
 
     from iceberg_compaction_spark.commit import CommitManager
+    from iceberg_compaction_spark.sources.catalog import load_head
     from iceberg_compaction_spark.sources.fileio import fileio_for
     from iceberg_compaction_spark.sources.ingest import (
         _commit,
-        _load_head,
         read_table_mor,
     )
     from iceberg_compaction_spark.sources.manifest import Manifest
     from iceberg_compaction_spark.sources.puffin import write_puffin
 
-    current = _load_head(catalog, table_name=name, to_branch=to_branch)
+    current = load_head(catalog, table_name=name, to_branch=to_branch)
     analyzed_sid = current.snapshot_id
     df = read_table_mor(spark, current)
     if columns is None:
@@ -388,7 +388,7 @@ def compute_table_stats(
     }
 
     def attempt() -> Manifest:
-        cur = _load_head(catalog, table_name=name, to_branch=to_branch)
+        cur = load_head(catalog, table_name=name, to_branch=to_branch)
         new = Manifest.from_dict(cur.to_dict())
         new.snapshot_id = cur.next_snapshot()
         new.sequence_number = cur.sequence_number  # rows unchanged
@@ -551,11 +551,12 @@ def compute_partition_stats(catalog, name: str, to_branch: str | None = None):
     import pyarrow.parquet as pq
 
     from iceberg_compaction_spark.commit import CommitManager
+    from iceberg_compaction_spark.sources.catalog import load_head
     from iceberg_compaction_spark.sources.fileio import fileio_for
-    from iceberg_compaction_spark.sources.ingest import _commit, _load_head
+    from iceberg_compaction_spark.sources.ingest import _commit
     from iceberg_compaction_spark.sources.manifest import Manifest
 
-    current = _load_head(catalog, table_name=name, to_branch=to_branch)
+    current = load_head(catalog, table_name=name, to_branch=to_branch)
     analyzed_sid = current.snapshot_id
     rows = partition_stats_rows(current)
     stats_dir = os.path.join(current.table_root, "metadata")
@@ -619,7 +620,7 @@ def compute_partition_stats(catalog, name: str, to_branch: str | None = None):
     }
 
     def attempt() -> Manifest:
-        cur = _load_head(catalog, table_name=name, to_branch=to_branch)
+        cur = load_head(catalog, table_name=name, to_branch=to_branch)
         new = Manifest.from_dict(cur.to_dict())
         new.snapshot_id = cur.next_snapshot()
         new.sequence_number = cur.sequence_number  # rows unchanged

@@ -110,14 +110,20 @@ class AutoCompactionPlanner:
     def __init__(self, config: AutoCompactionConfig | None = None) -> None:
         self.config = config or AutoCompactionConfig()
 
-    def plan_report(
-        self,
-        tasks: list[FileScanTask] | None,
-        snapshot_id: int = 0,
-        branch: str = "main",
-        starting_sequence_number: int = 0,
-    ) -> AutoPlanReport:
-        """Single-pass: stats + candidate selection + grouping.
+    def plan_manifest(self, manifest, branch: str = "main") -> AutoPlanReport:
+        """:meth:`plan_report` over a snapshot's live files, with the
+        chosen groups bound to that snapshot
+        (``Manifest.compaction_plans``) — the plans every auto entry
+        point executes."""
+        report = self.plan_report(list(manifest.data_files))
+        report.plans = manifest.compaction_plans(
+            [p.file_group for p in report.plans], branch
+        )
+        return report
+
+    def plan_report(self, tasks: list[FileScanTask] | None) -> AutoPlanReport:
+        """Single-pass: stats + candidate selection + grouping.  The
+        plans carry no table context; see :meth:`plan_manifest`.
 
         ``tasks=None`` models a branch with no snapshot.
         """
@@ -139,16 +145,7 @@ class AutoCompactionPlanner:
 
         def build(pcfg: CompactionPlanningConfig) -> AutoPlanReport:
             groups = PlanStrategy.from_config(pcfg).run(list(tasks))
-            plans = [
-                CompactionPlan(
-                    file_group=g,
-                    snapshot_id=snapshot_id,
-                    branch=branch,
-                    starting_sequence_number=starting_sequence_number,
-                )
-                for g in groups
-                if g.data_files
-            ]
+            plans = [CompactionPlan(file_group=g) for g in groups if g.data_files]
             return self._report_from_plans(
                 pcfg.compaction_type, plans, total_data_bytes, AutoPlanReason.RECOMMENDED
             )

@@ -46,7 +46,8 @@ from iceberg_compaction_spark.plans.auto import (
     AutoCompactionPlanner,
     AutoPlanReport,
 )
-from iceberg_compaction_spark.sources.manifest import Manifest, scan_data_files
+from iceberg_compaction_spark.sources.catalog import load_head
+from iceberg_compaction_spark.sources.manifest import Manifest
 from iceberg_compaction_spark.sources.manifest_rewrite import (
     ManifestRewriteStats,
     rewrite_manifests,
@@ -139,23 +140,9 @@ def maintain(
     branch target (it would commit on main) and expiration/orphan
     cleanup keep their global, ref-protecting semantics.
     """
-    from dataclasses import replace
-
     policy = policy or MaintenancePolicy()
-
-    def _load() -> Manifest:
-        if to_branch:
-            return catalog.load_table_ref(table_name, to_branch)
-        return catalog.load_table(table_name)
-
-    def _commit(current: Manifest, new: Manifest) -> Manifest:
-        if to_branch:
-            return catalog.commit_table(
-                table_name, current.snapshot_id, new, to_branch=to_branch
-            )
-        return catalog.commit_table(table_name, current.snapshot_id, new)
-
-    before = _load().snapshot_id
+    engine = Compaction(spark=spark, config=policy.engine)
+    before = load_head(catalog, table_name, to_branch).snapshot_id
     if policy.upgrade_to_version is not None:
         if to_branch:
             raise ValueError(
@@ -167,69 +154,50 @@ def maintain(
         )
 
         upgrade_format_version(catalog, table_name, policy.upgrade_to_version)
-    manifest = _load()
+    manifest = load_head(catalog, table_name, to_branch)
 
-    report = AutoCompactionPlanner(policy.auto).plan_report(
-        scan_data_files(manifest),
-        snapshot_id=manifest.snapshot_id,
-        starting_sequence_number=manifest.sequence_number,
+    report = AutoCompactionPlanner(policy.auto).plan_manifest(
+        manifest, to_branch or "main"
     )
-    for p in report.plans:
-        p.schema_id = manifest.schema_id
-        p.branch = to_branch or "main"
-    stats = CompactionStats()
-    if report.plans:
-        engine = Compaction(
-            spark=spark,
-            config=replace(
-                policy.engine,
-                planning=policy.auto._planning(report.selected_strategy),
+    results, stats = engine.execute_plans(manifest, report.plans)
+    if results:
+        engine.commit_catalog(
+            catalog,
+            table_name,
+            lambda head: engine.commit_manager.rewrite_files(
+                head, results, branch=to_branch or "main"
             ),
+            to_branch,
         )
-        results, stats = engine.execute_plans(manifest, report.plans)
-        if results:
 
-            def attempt() -> Manifest:
-                current = _load()
-                new = engine.commit_manager.rewrite_files(
-                    current, results, branch=to_branch or "main"
-                )
-                return _commit(current, new)
-
-            engine.commit_manager.commit_with_retry(attempt)
-
-    # Both delete-maintenance steps commit through the SAME retry loop
-    # the compaction step uses: a concurrent writer racing the long
-    # Spark job turns into a re-load + re-run instead of aborting the
-    # whole maintenance pass (conflicts are rare; the retry price is
-    # paid only when one actually happens).
-    from iceberg_compaction_spark.commit import CommitManager
+    # Both delete-maintenance steps commit through the SAME loop the
+    # compaction step uses: a concurrent writer racing the long Spark
+    # job turns into a re-load + re-run instead of aborting the whole
+    # maintenance pass (conflicts are rare; the retry price is paid
+    # only when one actually happens).
     from iceberg_compaction_spark.plans.datamodel import POSITION_DELETE
     from iceberg_compaction_spark.sources.puffin import is_puffin_file
-
-    mgr = CommitManager()
 
     eqc = EqConvertStats()
     if policy.convert_eq_deletes:
         eq_live = {
             d.path
-            for t in _load().data_files
+            for t in load_head(catalog, table_name, to_branch).data_files
             for d in t.deletes
             if d.content != POSITION_DELETE
         }
         if eq_live:
             holder: list[EqConvertStats] = []
 
-            def attempt_eq() -> Manifest:
-                current = _load()
-                new_m, stats_eq = convert_equality_deletes(spark, current)
+            def convert(head: Manifest) -> Manifest:
+                new_m, stats_eq = convert_equality_deletes(spark, head)
                 holder.append(stats_eq)
                 if not stats_eq.input_equality_files:
-                    return current  # raced away: nothing left to convert
-                new_m.snapshot_id = current.snapshot_id + 1
-                return _commit(current, new_m)
+                    return head  # raced away: nothing left to convert
+                new_m.snapshot_id = head.snapshot_id + 1
+                return new_m
 
-            mgr.commit_with_retry(attempt_eq)
+            engine.commit_catalog(catalog, table_name, convert, to_branch)
             eqc = holder[-1]
 
     drw = DeleteRewriteStats()
@@ -237,7 +205,7 @@ def maintain(
         # gate on driver-scale manifest metadata BEFORE the Spark job:
         # below the threshold the consolidation would only be abandoned
         # (its output files left orphaned) — never start it
-        cur_m = _load()
+        cur_m = load_head(catalog, table_name, to_branch)
         pos_live = {
             d.path
             for t in cur_m.data_files
@@ -252,22 +220,21 @@ def maintain(
         ):
             holder_d: list[DeleteRewriteStats] = []
 
-            def attempt_drw() -> Manifest:
-                current = _load()
-                new_m, stats_d = rewrite_position_deletes(spark, current)
+            def consolidate(head: Manifest) -> Manifest:
+                new_m, stats_d = rewrite_position_deletes(spark, head)
                 holder_d.append(stats_d)
                 worth = stats_d.input_delete_files >= (
                     policy.rewrite_deletes_min_files
                 ) or (
-                    current.format_version >= 3
+                    head.format_version >= 3
                     and stats_d.input_delete_files
                 )
                 if not (worth and stats_d.output_delete_files):
-                    return current  # raced below the threshold
-                new_m.snapshot_id = current.snapshot_id + 1
-                return _commit(current, new_m)
+                    return head  # raced below the threshold
+                new_m.snapshot_id = head.snapshot_id + 1
+                return new_m
 
-            mgr.commit_with_retry(attempt_drw)
+            engine.commit_catalog(catalog, table_name, consolidate, to_branch)
             drw = holder_d[-1]
 
     # manifest-metadata hygiene BEFORE expiration: the rewrite's replace
@@ -317,7 +284,8 @@ def maintain(
     # way, and maintain treats that as "nothing to do", not a failure)
     gc_off = (
         str(
-            (_load().properties or {}).get("gc.enabled", "true")
+            (load_head(catalog, table_name, to_branch).properties or {})
+            .get("gc.enabled", "true")
         ).lower()
         == "false"
     )
@@ -344,7 +312,7 @@ def maintain(
         orphans = orphans + catalog.remove_orphan_metadata(
             table_name, older_than_s=policy.orphan_older_than_s
         )
-    after = _load().snapshot_id
+    after = load_head(catalog, table_name, to_branch).snapshot_id
     return MaintenanceReport(
         table=table_name,
         snapshot_before=before,

@@ -1358,6 +1358,17 @@ def remove_orphan_files_for(
     return sorted(removed)
 
 
+def load_head(catalog, table_name: str, to_branch: str | None = None):
+    """The head a write plans and commits against: the named branch's
+    snapshot when ``to_branch`` is set (reference: branch-targeted
+    commits, core/src/compaction/mod.rs:97,1307-1336), else the table
+    head.  Every catalog's ``commit_table`` takes the same
+    ``to_branch`` (None = main), so the pair needs no fork."""
+    if to_branch:
+        return catalog.load_table_ref(table_name, to_branch)
+    return catalog.load_table(table_name)
+
+
 def rollback_table(
     catalog, name: str, snapshot_id: int, to_branch: str | None = None
 ) -> Manifest:
@@ -1378,11 +1389,7 @@ def rollback_table(
     from iceberg_compaction_spark.commit import CommitManager
 
     def attempt() -> Manifest:
-        cur = (
-            catalog.load_table_ref(name, to_branch)
-            if to_branch
-            else catalog.load_table(name)
-        )
+        cur = load_head(catalog, name, to_branch)
         if cur.snapshot_id == snapshot_id:
             return cur  # already there: no empty commit
         old = catalog.load_table_at(name, snapshot_id)
@@ -1392,11 +1399,9 @@ def rollback_table(
         # a later equality delete must still apply above this snapshot
         new.sequence_number = max(cur.sequence_number, old.sequence_number) + 1
         new.operation = "overwrite"
-        if to_branch:
-            return catalog.commit_table(
-                name, cur.snapshot_id, new, to_branch=to_branch
-            )
-        return catalog.commit_table(name, cur.snapshot_id, new)
+        return catalog.commit_table(
+            name, cur.snapshot_id, new, to_branch=to_branch
+        )
 
     return CommitManager().commit_with_retry(attempt)
 
@@ -1464,11 +1469,7 @@ def cherry_pick(
                 "publish via fast_forward (exact lineage) or re-apply "
                 "the DML against the current head"
             )
-        cur = (
-            catalog.load_table_ref(name, to_branch)
-            if to_branch
-            else catalog.load_table(name)
-        )
+        cur = load_head(catalog, name, to_branch)
         have = set(cur.paths())
         added_set = set(diff.added_data_files)
         added = [
@@ -1495,11 +1496,9 @@ def cherry_pick(
                     t, sequence_number=new.sequence_number, deletes=[]
                 )
             )
-        if to_branch:
-            return catalog.commit_table(
-                name, cur.snapshot_id, new, to_branch=to_branch
-            )
-        return catalog.commit_table(name, cur.snapshot_id, new)
+        return catalog.commit_table(
+            name, cur.snapshot_id, new, to_branch=to_branch
+        )
 
     return CommitManager().commit_with_retry(attempt)
 
@@ -1564,11 +1563,7 @@ def _cherry_pick_overwrite(
             "it cannot be scoped to partition cells; re-apply the DML "
             "against the current head"
         )
-    cur = (
-        catalog.load_table_ref(name, to_branch)
-        if to_branch
-        else catalog.load_table(name)
-    )
+    cur = load_head(catalog, name, to_branch)
     # untouched-since-fork validation, cell by cell
     fork_state = _cell_state(parent, cells)
     head_state = _cell_state(cur, cells)
@@ -1604,11 +1599,9 @@ def _cherry_pick_overwrite(
                 t, sequence_number=new.sequence_number, deletes=[]
             )
         )
-    if to_branch:
-        return catalog.commit_table(
-            name, cur.snapshot_id, new, to_branch=to_branch
-        )
-    return catalog.commit_table(name, cur.snapshot_id, new)
+    return catalog.commit_table(
+        name, cur.snapshot_id, new, to_branch=to_branch
+    )
 
 
 def _check_gc_enabled(properties: dict, what: str) -> None:

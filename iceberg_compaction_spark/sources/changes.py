@@ -46,7 +46,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from iceberg_compaction_spark.operators.mor import rewrite_file_group
-from iceberg_compaction_spark.plans.datamodel import FileGroup
 from iceberg_compaction_spark.sources.manifest import Manifest
 
 CHANGE_TYPE = "_change_type"
@@ -321,19 +320,10 @@ def diff_files(old: Manifest, new: Manifest) -> FileDiff:
     return diff
 
 
-def _group(tasks, m: Manifest) -> FileGroup:
-    g = FileGroup.from_tasks(list(tasks))
-    g.format_version = m.format_version
-    g.schema_fields = m.schema_fields or None
-    return g
-
-
 def snapshot_rows(spark: SparkSession, manifest: Manifest) -> DataFrame:
     """All live rows of a snapshot: the full-table MOR read (position +
     equality deletes applied, hidden columns projected away)."""
-    return rewrite_file_group(
-        spark, _group(manifest.data_files, manifest)
-    )
+    return rewrite_file_group(spark, manifest.file_group())
 
 
 def _align(df: DataFrame, columns: list[str]) -> DataFrame:
@@ -362,9 +352,7 @@ def table_changes(
         tasks = [t for t in new.data_files if t.data_file_path in added]
         if not tasks:
             return empty
-        inserts = rewrite_file_group(
-            spark, _group(tasks, new)
-        )
+        inserts = rewrite_file_group(spark, new.file_group(tasks))
         return _align(inserts, columns).withColumn(
             CHANGE_TYPE, F.lit("insert")
         )
@@ -381,13 +369,13 @@ def table_changes(
     old_tasks = [t for t in old.data_files if t.data_file_path in affected]
     new_tasks = [t for t in new.data_files if t.data_file_path in affected]
     old_rows = _align(
-        rewrite_file_group(spark, _group(old_tasks, old))
+        rewrite_file_group(spark, old.file_group(old_tasks))
         if old_tasks
         else snapshot_rows(spark, old).limit(0),
         columns,
     )
     new_rows = _align(
-        rewrite_file_group(spark, _group(new_tasks, new))
+        rewrite_file_group(spark, new.file_group(new_tasks))
         if new_tasks
         else new_schema_df.limit(0),
         columns,

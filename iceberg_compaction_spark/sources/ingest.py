@@ -36,9 +36,9 @@ from iceberg_compaction_spark.operators.mor import rewrite_file_group
 from iceberg_compaction_spark.plans.datamodel import (
     EQUALITY_DELETE,
     DeleteFile,
-    FileGroup,
     FileScanTask,
 )
+from iceberg_compaction_spark.sources.catalog import load_head
 from iceberg_compaction_spark.sources.manifest import Manifest
 from iceberg_compaction_spark.sources.scan import HIDDEN_SEQ
 
@@ -202,15 +202,6 @@ def _eq_attach_needed(t, default_spec_id, spec_len, fields):
     return True
 
 
-def _load_head(catalog, table_name: str, to_branch: str | None):
-    """The DML planning base: the named branch's snapshot when
-    ``to_branch`` is set (reference: branch-targeted commits,
-    core/src/compaction/mod.rs:97,1307-1336), else the table head."""
-    if to_branch:
-        return catalog.load_table_ref(table_name, to_branch)
-    return catalog.load_table(table_name)
-
-
 def _commit(catalog, table_name: str, cur, new, to_branch: str | None):
     """CAS-commit ``new`` against the target ref — main by default, a
     named branch under ``to_branch`` (main then provably stays put
@@ -220,11 +211,9 @@ def _commit(catalog, table_name: str, cur, new, to_branch: str | None):
     where newly added data files get their ``first_row_id`` assigned
     (spec: the commit assigns row ids from the table's next-row-id)."""
     new.assign_row_ids()
-    if to_branch:
-        return catalog.commit_table(
-            table_name, cur.snapshot_id, new, to_branch=to_branch
-        )
-    return catalog.commit_table(table_name, cur.snapshot_id, new)
+    return catalog.commit_table(
+        table_name, cur.snapshot_id, new, to_branch=to_branch
+    )
 
 
 def _assert_unique_keys(df: DataFrame, keys: list[str], what: str) -> int:
@@ -284,7 +273,7 @@ def upsert(
 
     from iceberg_compaction_spark.commit import CommitConflict  # noqa: F401
 
-    current = _load_head(catalog, table_name, to_branch)
+    current = load_head(catalog, table_name, to_branch)
     table_root = current.table_root
     suffix = uuid.uuid4().hex[:8]
     eq_path = os.path.join(table_root, f"upsert-{suffix}-eqdel.parquet")
@@ -337,7 +326,7 @@ def upsert(
         return _scope_vals[col]
 
     def attempt() -> Manifest:
-        cur = _load_head(catalog, table_name, to_branch)
+        cur = load_head(catalog, table_name, to_branch)
         # sequence ABOVE the head we are committing against — recomputed
         # per attempt so a retry after losing the CAS race lands STRICTLY
         # above the winner (its delete must apply to the winner's files)
@@ -443,7 +432,7 @@ def delete_where(
     suffix = uuid.uuid4().hex[:8]
 
     def attempt() -> Manifest:
-        cur = _load_head(catalog, table_name, to_branch)
+        cur = load_head(catalog, table_name, to_branch)
         matched = (
             _matched_scan(spark, cur)
             .where(predicate)
@@ -470,11 +459,7 @@ def delete_where(
 def _matched_scan(spark, cur) -> DataFrame:
     """CURRENT-snapshot MOR scan carrying hidden ``(file, pos)`` row
     identity — the input every predicate DML statement shares."""
-    group = FileGroup.from_tasks(cur.data_files)
-    group.format_version = cur.format_version
-    group.schema_fields = cur.schema_fields or None
-    group.name_mapping = _manifest_name_mapping(cur)
-    return rewrite_file_group(spark, group, keep_file_pos=True)
+    return rewrite_file_group(spark, cur.file_group(), keep_file_pos=True)
 
 
 def _write_position_artifact(spark, cur, matched_pos, path):
@@ -654,7 +639,7 @@ def update_where(
     suffix = uuid.uuid4().hex[:8]
 
     def attempt() -> Manifest:
-        cur = _load_head(catalog, table_name, to_branch)
+        cur = load_head(catalog, table_name, to_branch)
         df = _matched_scan(spark, cur)
         table_cols = [
             c
@@ -790,7 +775,7 @@ def merge_into(
     suffix = uuid.uuid4().hex[:8]
 
     def attempt() -> Manifest:
-        cur = _load_head(catalog, table_name, to_branch)
+        cur = load_head(catalog, table_name, to_branch)
         df = _matched_scan(spark, cur)
         if delete_unmatched_target:
             # the NOT MATCHED BY SOURCE anti-join reads the target scan
@@ -1014,7 +999,7 @@ def add_files(
         }
 
     def attempt() -> Manifest:
-        cur = _load_head(catalog, table_name, to_branch)
+        cur = load_head(catalog, table_name, to_branch)
         if cur.partition_spec:
             _stamp_hive_partitions(
                 staged,
@@ -1111,7 +1096,7 @@ def overwrite_partitions(
     """
     from iceberg_compaction_spark.commit import CommitManager
 
-    current = _load_head(catalog, table_name, to_branch)
+    current = load_head(catalog, table_name, to_branch)
     suffix = uuid.uuid4().hex[:8]
     new_tasks = _write_dml_data_files(
         spark, current, df, f"overwrite-{suffix}"
@@ -1121,7 +1106,7 @@ def overwrite_partitions(
     written_cells = {partition_cell(t.partition) for t in new_tasks}
 
     def attempt() -> Manifest:
-        cur = _load_head(catalog, table_name, to_branch)
+        cur = load_head(catalog, table_name, to_branch)
         new = Manifest.from_dict(cur.to_dict())
         new.snapshot_id = cur.next_snapshot()
         new.sequence_number = cur.sequence_number + 1
@@ -1147,11 +1132,7 @@ def overwrite_partitions(
 def read_table_mor(spark: SparkSession, manifest: Manifest) -> DataFrame:
     """Read a manifest table with all its delete files applied — the
     query-engine view of a MOR table (what compaction materializes)."""
-    group = FileGroup.from_tasks(manifest.data_files)
-    group.format_version = manifest.format_version
-    group.schema_fields = manifest.schema_fields or None
-    group.name_mapping = _manifest_name_mapping(manifest)
-    return rewrite_file_group(spark, group)
+    return rewrite_file_group(spark, manifest.file_group())
 
 
 def read_table_mor_with_lineage(
@@ -1196,22 +1177,4 @@ def read_table_mor_with_lineage(
         raise ValueError(
             "row-lineage read of an empty table (no data files)"
         )
-    group = FileGroup.from_tasks(manifest.data_files)
-    group.format_version = manifest.format_version
-    group.schema_fields = manifest.schema_fields or None
-    group.name_mapping = _manifest_name_mapping(manifest)
-    return rewrite_file_group_with_lineage(spark, group)
-
-
-def _manifest_name_mapping(manifest: Manifest) -> dict | None:
-    from iceberg_compaction_spark.sources.schema_evo import (
-        NAME_MAPPING_PROP,
-        parse_name_mapping,
-    )
-
-    return (
-        parse_name_mapping(
-            (manifest.properties or {}).get(NAME_MAPPING_PROP)
-        )
-        or None
-    )
+    return rewrite_file_group_with_lineage(spark, manifest.file_group())

@@ -26,7 +26,9 @@ from iceberg_compaction_spark.plans import pruning as _pruning
 from iceberg_compaction_spark.plans.datamodel import (
     EQUALITY_DELETE,
     POSITION_DELETE,
+    CompactionPlan,
     DeleteFile,
+    FileGroup,
     FileScanTask,
 )
 
@@ -614,6 +616,65 @@ class Manifest:
             )
             for f in self.partition_spec
         ]
+
+    # ---- read groups and compaction plans ---------------------------------
+
+    def compaction_plans(
+        self, groups: list[FileGroup], branch: str = "main"
+    ) -> list[CompactionPlan]:
+        """Bind planned ``groups`` to this snapshot.  This is the ONE
+        place a group learns how the table is read (format version, so
+        v3 deletion vectors apply reader-side; field-id schema; name
+        mapping) and a plan learns what the commit checks and the
+        rewrite writes under (pinned snapshot and sequence, schema id
+        and columns, current partition spec and id, declared sort
+        order).  Every compaction entry point and every full-table read
+        builds on it (the reference's plan-carries-table-context shape,
+        core/src/compaction/mod.rs:1227-1285)."""
+        from iceberg_compaction_spark.sources.schema_evo import (
+            NAME_MAPPING_PROP,
+            parse_name_mapping,
+        )
+
+        props = self.properties or {}
+        nmap = parse_name_mapping(props.get(NAME_MAPPING_PROP)) or None
+        cols = tuple(props.get("schema.columns") or ())
+        spec = tuple(
+            (f["source"], f.get("transform", "identity"), f.get("name"))
+            for f in self.partition_spec
+        )
+        order = tuple(
+            (f["source"], f.get("direction", "asc"), f.get("null-order"))
+            for f in self.sort_order
+        )
+        plans = []
+        for g in groups:
+            g.format_version = self.format_version
+            g.schema_fields = self.schema_fields or None
+            g.name_mapping = nmap
+            plans.append(
+                CompactionPlan(
+                    file_group=g,
+                    snapshot_id=self.snapshot_id,
+                    branch=branch,
+                    starting_sequence_number=self.sequence_number,
+                    schema_id=self.schema_id,
+                    schema_columns=cols,
+                    partition_spec=spec,
+                    spec_id=self.default_spec_id,
+                    sort_order=order,
+                )
+            )
+        return plans
+
+    def file_group(self, tasks: list[FileScanTask] | None = None) -> FileGroup:
+        """The MOR read group over ``tasks`` (default: every live data
+        file), read exactly as a compaction plan of this snapshot reads
+        it."""
+        group = FileGroup.from_tasks(
+            self.data_files if tasks is None else list(tasks)
+        )
+        return self.compaction_plans([group])[0].file_group
 
     # ---- queries -----------------------------------------------------------
 

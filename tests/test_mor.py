@@ -232,37 +232,6 @@ def test_mor_consecutive_same_schema_files_merge(spark, fixture, tmp_path):
     assert ids == [i for i in range(20) if i not in (2, 4)]
 
 
-def test_mor_equality_skew_two_path_matches_plain(spark, fixture):
-    """The salted two-path equality anti-join is result-identical to the
-    plain join; hot keys only change shuffle distribution."""
-    from iceberg_compaction_spark.operators.mor import (
-        EqualityDeleteTable,
-        apply_equality_deletes,
-    )
-    from iceberg_compaction_spark.sources.scan import read_data_files
-
-    g = fixture
-    seq_by_path = {t.data_file_path: t.sequence_number for t in g.data_files}
-    data = read_data_files(
-        spark,
-        [t.data_file_path for t in g.data_files],
-        need_seq_num=True,
-        need_file_path_and_pos=True,
-        seq_by_path=seq_by_path,
-    )
-    eq = EqualityDeleteTable(
-        df=spark.read.parquet(g.equality_delete_files[0].path),
-        equality_keys=["id"],
-    )
-    plain = {r["id"] for r in apply_equality_deletes(data, eq).collect()}
-    hot = spark.createDataFrame([(5,), (12,), (99,)], ["id"])  # incl. absent key
-    two_path = {
-        r["id"]
-        for r in apply_equality_deletes(data, eq, hot_keys=hot, n_salts=4).collect()
-    }
-    assert two_path == plain
-
-
 def test_mor_v3_reader_side_dv_matches_v2(spark, fixture):
     """Format v3: position deletes apply reader-side (deletion vectors in
     the scan), only equality deletes join — survivors identical to v2

@@ -910,6 +910,12 @@ def test_engine_path_name_mapping_and_compaction_migration(spark, tmp_path):
     assert df.columns == ["id", "color"]
     got = {r["id"]: r["color"] for r in df.collect()}
     assert got == {i: f"c{i}" for i in range(6)}
+    # the changelog's snapshot read resolves the same mapped import
+    from iceberg_compaction_spark.sources import changes
+
+    assert sorted(changes.snapshot_rows(spark, m).collect()) == sorted(
+        df.collect()
+    )
 
     new_m, stats = Compaction(spark, CompactionConfig.small_files()).compact(m)
     assert stats.output_files_count >= 1

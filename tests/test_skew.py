@@ -1,71 +1,5 @@
-"""Skew utilities: salted joins must be result-identical to plain joins."""
-
-import pytest
-from pyspark.sql import functions as F
-
-from iceberg_compaction_spark.operators import skew
-
-
-@pytest.fixture(scope="module")
-def skewed(spark):
-    # one hot key (0) with 5000 rows, 100 cold keys with 10 rows each
-    big = spark.range(6000).select(
-        F.when(F.col("id") < 5000, 0)
-        .otherwise(((F.col("id") - 5000) % 100) + 1)
-        .alias("k"),
-        F.col("id").alias("payload"),
-    )
-    small = spark.range(50).select((F.col("id") * 2).alias("k"))  # even keys
-    return big, small
-
-
-def test_salted_inner_matches_plain(spark, skewed):
-    big, small = skewed
-    plain = big.join(small, on=["k"], how="inner")
-    salted = skew.salted_inner_join(big, small, on=["k"], n_salts=8)
-    assert salted.count() == plain.count()
-    a = {(r["k"], r["payload"]) for r in plain.collect()}
-    b = {(r["k"], r["payload"]) for r in salted.collect()}
-    assert a == b
-
-
-def test_salted_anti_matches_plain(spark, skewed):
-    big, small = skewed
-    plain = big.join(small, on=["k"], how="left_anti")
-    salted = skew.salted_inner_join(big, small, on=["k"], n_salts=8, how="left_anti")
-    a = {(r["k"], r["payload"]) for r in plain.collect()}
-    b = {(r["k"], r["payload"]) for r in salted.collect()}
-    assert a == b
-
-
-def test_skewed_keys_finds_hot_key(spark, skewed):
-    big, _ = skewed
-    hot = skew.skewed_keys(big, on=["k"], threshold_rows=1000)
-    assert [r["k"] for r in hot.collect()] == [0]
-    # sampled path still finds a 5000-row key at 20%
-    hot_s = skew.skewed_keys(big, on=["k"], threshold_rows=1000, sample_fraction=0.2)
-    assert 0 in {r["k"] for r in hot_s.collect()}
-
-
-def test_two_path_anti_exact(spark, skewed):
-    big, small = skewed
-    hot = skew.skewed_keys(big, on=["k"], threshold_rows=1000)
-    plain = big.join(small, on=["k"], how="left_anti")
-    two = skew.two_path_left_anti(big, small, on=["k"], hot=hot, n_salts=8)
-    a = sorted((r["k"], r["payload"]) for r in plain.collect())
-    b = sorted((r["k"], r["payload"]) for r in two.collect())
-    assert a == b
-
-
-def test_salted_rejects_outer(spark, skewed):
-    big, small = skewed
-    with pytest.raises(ValueError):
-        skew.salted_inner_join(big, small, on=["k"], how="left_outer")
-
-
-# ---------------------------------------------------------------------------
-# skew-safe sessionization (time-bucketed hot path)
-# ---------------------------------------------------------------------------
+"""Skew-safe sessionization: the time-bucketed hot path must be
+result-identical to the plain sessionizer."""
 
 
 def _mk_events(spark, rows):
