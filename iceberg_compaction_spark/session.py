@@ -47,8 +47,9 @@ def session_builder(
 
     Defaults every entry point shares: AQE with partition coalescing
     (scale-adaptive partitioning, guide §2.2), UTC session timezone
-    (oracle comparability), UI off (local harnesses), and the preloading
-    Python-worker daemon.  ``extra_conf`` wins on key collisions so a
+    (oracle comparability), UI off (local harnesses), the preloading
+    Python-worker daemon, and broadcast blocks small enough to stay out
+    of G1's humongous regions.  ``extra_conf`` wins on key collisions so a
     caller can override any default.
     """
     from pyspark.sql import SparkSession
@@ -70,6 +71,15 @@ def session_builder(
         # (the hardcoded 10 s connect-back accept in PythonWorkerFactory)
         # is not reachable by conf — streaming/pipeline.py retries it.
         "spark.python.authenticate.socketTimeout": "60s",
+        # Every broadcast (each stage's task binary, each file scan's
+        # Hadoop conf) first serializes into a buffer of this size,
+        # however small the payload.  At Spark's 4 MB default each one
+        # is a G1 humongous object, and on a small committed heap a
+        # burst of them forces back-to-back young collections whose
+        # pause ratio makes G1 grow the heap by hundreds of MB at once,
+        # so peak RSS jumps from one run to the next.  Below half of
+        # G1's smallest (1 MB) region the buffers are plain eden garbage.
+        "spark.broadcast.blockSize": "256k",
     }
     conf.update(extra_conf)
     builder = SparkSession.builder.master(master).appName(app_name)
